@@ -1,8 +1,9 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Versioned keyed table with snapshot (time-travel) reads — the
   * manifest-log essence of the Delta/Iceberg commit protocol, built
@@ -12,13 +13,15 @@ import org.apache.spark.sql.functions._
   *    affected partitions and never touches existing ones (true
   *    copy-on-write at the FILE level, unlike [[Sinks.upsert]]'s
   *    directory swap which discards the old generation);
-  *  - each commit is one manifest under `_graft_log/` listing every
-  *    live file of that version; the atomic rename of the manifest IS
-  *    the commit point — a crash at any earlier moment leaves only
-  *    invisible orphan files, never a torn table;
+  *  - each commit is one manifest under `_graft_log/` holding the
+  *    table schema and listing every live file of that version; the
+  *    atomic rename of the manifest IS the commit point — a crash at
+  *    any earlier moment leaves only invisible orphan files, never a
+  *    torn table;
   *  - readers resolve a version's manifest and read exactly those
-  *    files (`basePath` keeps the hive partition column), so
-  *    concurrent readers of version N are isolated from any writer;
+  *    files with exactly its recorded schema (`basePath` keeps the
+  *    hive partition column), so concurrent readers of version N are
+  *    isolated from any writer and no read infers a schema;
   *  - unreferenced files stay on disk for time travel until
   *    [[vacuum]] retires manifests and deletes what only they
   *    referenced.
@@ -51,7 +54,19 @@ object Versioned {
 
   private val LogDir = "_graft_log"
 
-  /** One manifest line: a live data file plus (optionally) its
+  private val SchemaTag = "#schema"
+
+  /** Stable key of the stats-less footer fallback in
+    * [[entriesWithStats]]: its log lines and [[footerStatsFallbacks]]. */
+  private[graft] val FooterStatsFallbackKey = "graft.versioned.footer_stats_fallback"
+
+  /** New files committed without stats because their footer could not
+    * be read (driver-wide, monotonic). */
+  private[graft] val footerStatsFallbacks = new java.util.concurrent.atomic.AtomicLong
+
+  private lazy val logger = org.slf4j.LoggerFactory.getLogger("graft.sources.Versioned")
+
+  /** One manifest file line: a live data file plus (optionally) its
     * per-file min/max key statistics — the Delta/Iceberg
     * data-skipping core. Stats are collected at WRITE time for the
     * merge key when it is integral; readers prune files driver-side
@@ -63,6 +78,13 @@ object Versioned {
     * ignore nulls (Spark agg semantics), which is SAFE for pruning: a
     * range predicate never selects null keys, so a pruned file cannot
     * hide a qualifying row.
+    *
+    * Manifest format (UTF-8, one record per line): the first line is
+    * the header `#schema<TAB><StructType JSON>`, the table schema of
+    * the version with the partition column last; every further line
+    * is a file entry, either `path` or
+    * `path<TAB>statsCol<TAB>min<TAB>max`, with `path` relative to the
+    * table root (`part=value/name.parquet`).
     */
   private[graft] case class FileEntry(path: String, statsCol: Option[String],
       min: Option[Long], max: Option[Long]) {
@@ -101,40 +123,69 @@ object Versioned {
   def latestVersion(spark: SparkSession, path: String): Option[Int] =
     versions(spark, path).lastOption
 
-  /** The relative data-file paths live at `version`. */
-  private[graft] def manifestEntries(spark: SparkSession, path: String,
-      version: Int): Seq[FileEntry] = {
+  private def headOf(spark: SparkSession, path: String): Int =
+    latestVersion(spark, path).getOrElse(
+      throw new IllegalArgumentException(s"versioned table $path has no commits"))
+
+  /** One version's manifest: its table schema and its live files. */
+  private case class Manifest(schema: StructType, entries: Seq[FileEntry])
+
+  /** Parse `version`'s manifest; a manifest without the schema header
+    * is rejected, naming the file. */
+  private def readManifest(spark: SparkSession, path: String, version: Int): Manifest = {
     val root = new Path(path)
     val fs = fsOf(spark, root)
     val mp = manifestPath(root, version)
     require(fs.exists(mp), s"versioned table $path has no version $version")
     val in = fs.open(mp)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines().filter(_.nonEmpty)
-      .map(FileEntry.parse).toList
-    finally in.close()
+    val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+        .filter(_.nonEmpty).toList
+      finally in.close()
+    lines match {
+      case header :: files if header.startsWith(SchemaTag + "\t") =>
+        Manifest(DataType.fromJson(header.stripPrefix(SchemaTag + "\t")).asInstanceOf[StructType],
+          files.map(FileEntry.parse))
+      case _ => throw new IllegalStateException(
+        s"versioned manifest $mp has no $SchemaTag header line")
+    }
   }
+
+  /** The data-file entries live at `version`. */
+  private[graft] def manifestEntries(spark: SparkSession, path: String,
+      version: Int): Seq[FileEntry] =
+    readManifest(spark, path, version).entries
 
   private[graft] def manifestFiles(spark: SparkSession, path: String, version: Int): Seq[String] =
     manifestEntries(spark, path, version).map(_.path)
 
+  /** The table schema recorded in `version`'s manifest header: data
+    * columns in table order, partition column last. */
+  def tableSchema(spark: SparkSession, path: String, version: Int): StructType =
+    readManifest(spark, path, version).schema
+
+  /** Read `files` (relative to the table root) with the recorded
+    * `schema`. Supplying the schema is what keeps a read from
+    * launching a footer-inference job; files written before an
+    * ADD-COLUMN upsert read the new columns as NULL. */
+  private def readFiles(spark: SparkSession, path: String, schema: StructType,
+      files: Seq[String]): DataFrame =
+    spark.read.schema(schema).option("basePath", path)
+      .parquet(files.map(f => s"$path/$f"): _*)
+
   /** Snapshot read at `version` (default: latest). The returned frame
-    * reads exactly the files the version's manifest lists; `basePath`
-    * recovers the hive partition column from the directory names.
-    * `mergeSchema` unions the files' schemas, so after an ADD-COLUMN
-    * upsert ([[upsert]]'s schema evolution) files written before the
-    * widening read the new columns as NULL — Delta/Iceberg read
-    * semantics. (Production logs track the schema in the commit
-    * metadata instead of merging footers at read; footer-merge over
-    * the manifest's file list is the same contract, paid per read.)
+    * reads exactly the files the version's manifest lists, with the
+    * schema its header records; `basePath` recovers the hive partition
+    * column from the directory names. Invariant: the manifest header
+    * IS the table schema — readers never infer it from footers, so
+    * after an ADD-COLUMN upsert ([[upsert]]'s schema evolution) files
+    * written before the widening read the new columns as NULL
+    * (Delta/Iceberg read semantics).
     */
   def snapshot(spark: SparkSession, path: String, version: Int = -1): DataFrame = {
-    val v = if (version >= 0) version
-      else latestVersion(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"versioned table $path has no commits"))
-    val files = manifestFiles(spark, path, v)
-    require(files.nonEmpty, s"version $v of $path lists no files")
-    spark.read.option("basePath", path).option("mergeSchema", "true")
-      .parquet(files.map(f => s"$path/$f"): _*)
+    val v = if (version >= 0) version else headOf(spark, path)
+    val m = readManifest(spark, path, v)
+    require(m.entries.nonEmpty, s"version $v of $path lists no files")
+    readFiles(spark, path, m.schema, m.entries.map(_.path))
   }
 
   /** Manifest entries surviving data skipping for
@@ -160,18 +211,15 @@ object Versioned {
     */
   def snapshotRange(spark: SparkSession, path: String, keyCol: String,
       lo: Long, hi: Long, version: Int = -1): DataFrame = {
-    val v = if (version >= 0) version
-      else latestVersion(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"versioned table $path has no commits"))
-    val keep = pruneEntries(manifestEntries(spark, path, v), keyCol, lo, hi)
+    val v = if (version >= 0) version else headOf(spark, path)
+    val m = readManifest(spark, path, v)
+    val keep = pruneEntries(m.entries, keyCol, lo, hi)
     val pred = col(keyCol).between(lo, hi)
     if (keep.isEmpty)
       // every file provably misses the range: preserve the schema,
       // return no rows, read nothing at runtime
       snapshot(spark, path, v).filter(pred).limit(0)
-    else spark.read.option("basePath", path).option("mergeSchema", "true")
-      .parquet(keep.map(e => s"$path/${e.path}"): _*)
-      .filter(pred)
+    else readFiles(spark, path, m.schema, keep.map(_.path)).filter(pred)
   }
 
   /** Snapshot diff — what changed between two commits: one row per
@@ -187,27 +235,25 @@ object Versioned {
     */
   def diff(spark: SparkSession, path: String, v1: Int, v2: Int,
       keyCol: String, partCol: String): DataFrame = {
-    val f1 = manifestFiles(spark, path, v1).toSet
-    val f2 = manifestFiles(spark, path, v2).toSet
+    val (m1, m2) = (readManifest(spark, path, v1), readManifest(spark, path, v2))
     // partitions whose file lists are identical across versions are
     // provably unchanged (files are immutable) — prune them up front
-    def parts(fs: Set[String]) = fs.groupBy(_.split('/').head)
-    val (p1, p2) = (parts(f1), parts(f2))
+    def parts(m: Manifest) = m.entries.map(_.path).toSet[String].groupBy(_.split('/').head)
+    val (p1, p2) = (parts(m1), parts(m2))
     val changed = (p1.keySet ++ p2.keySet).filter(p => p1.get(p) != p2.get(p))
-    def side(fs: Set[String]): DataFrame = {
-      val live = fs.filter(f => changed.contains(f.split('/').head)).toSeq.sorted
+    def side(m: Manifest): DataFrame = {
+      val live = m.entries.map(_.path).filter(f => changed.contains(f.split('/').head)).sorted
       if (live.isEmpty)
         // preserve schema for the outer join even when nothing changed
         snapshot(spark, path, v2).limit(0)
-      else spark.read.option("basePath", path).option("mergeSchema", "true")
-        .parquet(live.map(f => s"$path/$f"): _*)
+      else readFiles(spark, path, m.schema, live)
     }
     def keyed(df: DataFrame, tag: String): DataFrame = {
       val payload = df.columns.filterNot(c => c == keyCol || c == partCol).sorted
       df.select(col(keyCol), col(partCol),
         md5(to_json(struct(payload.map(col).toIndexedSeq: _*))).as(s"h_$tag"))
     }
-    keyed(side(f1), "a").join(keyed(side(f2), "b"), Seq(keyCol, partCol), "full_outer")
+    keyed(side(m1), "a").join(keyed(side(m2), "b"), Seq(keyCol, partCol), "full_outer")
       .withColumn("change",
         when(col("h_a").isNull, lit("insert"))
           .when(col("h_b").isNull, lit("delete"))
@@ -226,9 +272,10 @@ object Versioned {
 
   private val MaxCommitRetries = 5
 
-  /** Atomically commit `files` as version `next`; returns it. The
-    * tmp-write + rename-without-overwrite makes a racing second writer
-    * fail its rename instead of silently clobbering. `next` is always
+  /** Atomically commit `schema` (the header line) and `files` as
+    * version `next`; returns it. The tmp-write +
+    * rename-without-overwrite makes a racing second writer fail its
+    * rename instead of silently clobbering. `next` is always
     * PINNED by the caller to the-head-it-validated-against + 1
     * (round 15: the listing-based fallback is gone — every writer,
     * including restore and compact, now commits through this pin),
@@ -238,15 +285,16 @@ object Versioned {
     * interleaved writer's files — the lost-update hole a listing-based
     * next leaves open.
     */
-  private def commit(fs: FileSystem, root: Path, files: Seq[FileEntry],
-      next: Int): Int = {
+  private def commit(fs: FileSystem, root: Path, schema: StructType,
+      files: Seq[FileEntry], next: Int): Int = {
     val log = new Path(root, LogDir)
     fs.mkdirs(log)
     val target = manifestPath(root, next)
     val tmp = new Path(target.getParent, target.getName + ".tmp" +
       java.util.UUID.randomUUID().toString.take(8))
     val out = fs.create(tmp, false)
-    try out.write((files.map(_.render).mkString("\n") + "\n").getBytes("UTF-8"))
+    val lines = s"$SchemaTag\t${schema.json}" +: files.map(_.render)
+    try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
     finally out.close()
     if (!fs.rename(tmp, target)) {
       fs.delete(tmp, true)
@@ -268,23 +316,23 @@ object Versioned {
     * fails loudly with `ConcurrentModificationException` (its merged
     * output is stale — retrying would need a re-merge, which the
     * single-writer-per-partition contract says is the caller's call).
+    * `schemaFor` maps the head's recorded schema (None: no table yet)
+    * to the schema this commit records.
     */
   private def commitOptimistic(spark: SparkSession, fs: FileSystem, root: Path,
       path: String, basedOn: Option[Int], claimed: Set[String],
-      newEntries: Seq[FileEntry],
-      schemaCheck: Option[org.apache.spark.sql.types.StructType]): Int = {
+      newEntries: Seq[FileEntry], schemaCheck: Option[StructType],
+      schemaFor: Option[StructType] => StructType): Int = {
     def partOf(e: FileEntry): String = e.path.split('/').head
-    def entriesAt(v: Option[Int]): Seq[FileEntry] =
-      v.map(manifestEntries(spark, path, _)).getOrElse(Seq.empty)
-    val basePaths = entriesAt(basedOn)
-      .filter(e => claimed.contains(partOf(e))).map(_.path).toSet
+    def claimedPaths(m: Option[Manifest]): Set[String] =
+      m.toSeq.flatMap(_.entries).filter(e => claimed.contains(partOf(e))).map(_.path).toSet
     var head = basedOn
+    var headManifest = head.map(readManifest(spark, path, _))
+    val basePaths = claimedPaths(headManifest)
     var attempt = 0
     while (true) {
-      val headEntries = entriesAt(head)
       if (head != basedOn) {
-        val headPaths = headEntries
-          .filter(e => claimed.contains(partOf(e))).map(_.path).toSet
+        val headPaths = claimedPaths(headManifest)
         if (headPaths != basePaths)
           throw new java.util.ConcurrentModificationException(
             s"versioned commit conflict at $path: a concurrent commit " +
@@ -297,14 +345,14 @@ object Versioned {
         // DISJOINT partition must make this writer a conflict too, or
         // the retry silently bypasses that loud contract (Delta treats
         // concurrent metadata change as a conflict for the same reason).
-        // The COMPACT path passes schemaCheck = None: its rewritten
-        // files carry their source partitions' own schema, and a
-        // column widened in an unclaimed partition still lives in that
-        // partition's files — mergeSchema reads recover it, so a
-        // disjoint widening is NOT a conflict for compaction (Delta's
-        // OPTIMIZE merges past disjoint writers the same way).
-        for (mergedSchema <- schemaCheck; v <- head) {
-          snapshot(spark, path, v).schema.foreach { f =>
+        // The COMPACT path passes schemaCheck = None: it commits the
+        // head's recorded schema, so a column widened in an unclaimed
+        // partition stays in the table schema and the compacted files
+        // read it as NULL — a disjoint widening is NOT a conflict for
+        // compaction (Delta's OPTIMIZE merges past disjoint writers
+        // the same way).
+        for (mergedSchema <- schemaCheck; hm <- headManifest) {
+          hm.schema.foreach { f =>
             mergedSchema.find(_.name == f.name) match {
               case Some(g) if g.dataType == f.dataType => ()
               case _ => throw new java.util.ConcurrentModificationException(
@@ -316,14 +364,16 @@ object Versioned {
           }
         }
       }
-      val carried = headEntries.filterNot(e => claimed.contains(partOf(e)))
-      try return commit(fs, root, carried ++ newEntries,
-        head.map(_ + 1).getOrElse(0))
+      val carried = headManifest.toSeq.flatMap(_.entries)
+        .filterNot(e => claimed.contains(partOf(e)))
+      try return commit(fs, root, schemaFor(headManifest.map(_.schema)),
+        carried ++ newEntries, head.map(_ + 1).getOrElse(0))
       catch {
         case e: CommitRaceException =>
           attempt += 1
           if (attempt > MaxCommitRetries) throw e
           head = latestVersion(spark, path)
+          headManifest = head.map(readManifest(spark, path, _))
       }
     }
     -1 // unreachable
@@ -331,13 +381,13 @@ object Versioned {
 
   /** RESTORE the table to an earlier version AS A NEW COMMIT (Delta's
     * `RESTORE TABLE ... VERSION AS OF` semantics): the target
-    * version's manifest is re-committed as the new head, so the
-    * rollback is itself versioned history — no data file is copied,
-    * moved, or deleted, the versions between target and old head stay
-    * readable for time travel until [[vacuum]] ages them out, and a
-    * second restore can roll the rollback back. Zero data IO at any
-    * table size: the commit writes one manifest file. Returns the new
-    * head version.
+    * version's manifest (schema and files) is re-committed as the new
+    * head, so the rollback is itself versioned history — no data file
+    * is copied, moved, or deleted, the versions between target and old
+    * head stay readable for time travel until [[vacuum]] ages them
+    * out, and a second restore can roll the rollback back. Zero data
+    * IO at any table size: the commit writes one manifest file.
+    * Returns the new head version.
     *
     * Concurrency (round 15): the commit is PINNED to head + 1 as read
     * at entry. A concurrent commit that moves the head first makes the
@@ -361,11 +411,10 @@ object Versioned {
       version: Int)(beforeCommit: () => Unit): Int = {
     val root = new Path(path)
     val fs = fsOf(spark, root)
-    val entries = manifestEntries(spark, path, version)
-    val head = latestVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"versioned table $path has no commits"))
+    val target = readManifest(spark, path, version)
+    val head = headOf(spark, path)
     beforeCommit()
-    try commit(fs, root, entries, head + 1)
+    try commit(fs, root, target.schema, target.entries, head + 1)
     catch { case e: CommitRaceException =>
       throw new java.util.ConcurrentModificationException(
         s"versioned restore conflict at $path: a concurrent commit moved " +
@@ -407,7 +456,10 @@ object Versioned {
     * with missing/foreign-typed statistics makes the whole file
     * conservatively stats-less (pruning keeps it; [[pruneEntries]]
     * never drops a stats-less file, so a footer anomaly can cost IO
-    * but never rows).
+    * but never rows). A footer that cannot be read at all also yields
+    * a stats-less entry; that fallback is logged with the file and the
+    * cause under [[FooterStatsFallbackKey]] and counted in
+    * [[footerStatsFallbacks]].
     */
   private def entriesWithStats(spark: SparkSession, path: String,
       newFiles: Seq[String], statsKey: Option[String]): Seq[FileEntry] = statsKey match {
@@ -451,17 +503,30 @@ object Versioned {
             if (safe && seen) FileEntry(f, Some(k), Some(mn), Some(mx))
             else FileEntry(f, None, None, None)
           } finally r.close()
-        } catch { case scala.util.control.NonFatal(_) =>
+        } catch { case scala.util.control.NonFatal(e) =>
+          footerStatsFallbacks.incrementAndGet()
+          logger.warn(s"$FooterStatsFallbackKey path=$path/$f cause=$e")
           FileEntry(f, None, None, None)
         }
       }
     case _ => newFiles.map(FileEntry(_, None, None, None))
   }
 
+  /** The schema a merge of `batch` commits on top of the recorded
+    * `base`: base's data columns, then the batch's added columns, then
+    * the partition column last — the order a footer merge of the
+    * resulting files yields. All fields nullable, as a file read
+    * returns them. */
+  private def evolve(base: StructType, batch: StructType, partCol: String): StructType = {
+    val data = base.filterNot(_.name == partCol)
+    val added = batch.filterNot(f => f.name == partCol || base.exists(_.name == f.name))
+    val part = base.find(_.name == partCol).orElse(batch.find(_.name == partCol))
+    GraftColumnBridge.asNullable(StructType(data ++ added ++ part))
+  }
+
   /** The merge key qualifies for manifest stats when it is integral
     * (long-renderable losslessly). */
-  private def statsKeyFor(schema: org.apache.spark.sql.types.StructType,
-      keyCol: String): Option[String] = {
+  private def statsKeyFor(schema: StructType, keyCol: String): Option[String] = {
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
     schema.find(_.name == keyCol).map(_.dataType).collect {
       case LongType | IntegerType | ShortType | ByteType => keyCol
@@ -492,7 +557,9 @@ object Versioned {
   /** [[upsert]] with a seam between the merge write and the commit —
     * SinksSpec interleaves a second writer's full upsert there to
     * exercise the optimistic-retry and true-conflict paths
-    * deterministically (a thread race would be a coin flip). */
+    * deterministically (a thread race would be a coin flip). The seam
+    * runs after the new files land in the table directory and before
+    * their footer stats are read. */
   private[graft] def upsertWithHook(spark: SparkSession, path: String,
       updates: DataFrame, keyCol: String, partCol: String)(
       beforeCommit: () => Unit): Int =
@@ -536,9 +603,10 @@ object Versioned {
         require(vrow.isNullAt(2) || vrow.getLong(2) == 0L,
           s"versioned cdc: $c must be 'upsert' or 'delete' (non-null) for every row")
       }
-      // the batch's distinct partition values (nulls rejected above),
-      // shared by the manifest prune and the post-write claim
-      val partVals = vrow.getSeq[Any](3)
+      // the batch's distinct partition directories (nulls rejected
+      // above), shared by the manifest prune and the post-write claim;
+      // ALL change keys (upserts AND deletes) claim their partition
+      val changedParts = vrow.getSeq[Any](3).map(v => s"$partCol=$v").toSet
       // rows that insert data: everything, minus delete tombstones
       val inserts = opCol match {
         case None => u
@@ -548,20 +616,18 @@ object Versioned {
       val tmp = new Path(root.getParent, root.getName + "_vtmp_" + tag)
       fs.delete(tmp, true)
       val prev = latestVersion(spark, path)
-      val merged = prev match {
+      val merged = prev.map(readManifest(spark, path, _)) match {
         case None => inserts
-        case Some(v) =>
+        case Some(Manifest(tableSchema, prevEntries)) =>
           // Schema evolution contract (the ADD COLUMN every
           // Delta/Iceberg user hits within weeks): the batch must
           // carry every existing table column with the SAME type (a
           // type conflict is rejected loudly, never coerced) and may
-          // ADD columns — the widened schema becomes the table's,
-          // carried-over files read the new columns as NULL via
-          // [[snapshot]]'s mergeSchema. The table schema comes from
-          // the snapshot (all live footers), not just the affected
-          // partitions, so a conflict with an untouched partition's
-          // column is caught too.
-          val tableSchema = snapshot(spark, path, v).schema
+          // ADD columns — the widened schema becomes the table's and
+          // carried-over files read the new columns as NULL. The
+          // table schema is the one the head manifest records, not
+          // just the affected partitions' files, so a conflict with an
+          // untouched partition's column is caught too.
           tableSchema.foreach { f =>
             inserts.schema.find(_.name == f.name) match {
               case None => throw new IllegalArgumentException(
@@ -573,15 +639,12 @@ object Versioned {
             }
           }
           val added = inserts.schema.filterNot(g => tableSchema.exists(_.name == g.name))
-          // ALL change keys (upserts AND deletes) claim their partition
-          val parts = partVals.map(v => s"$partCol=$v").toSet
           // driver-side manifest pruning: only affected partitions' files
-          val prevFiles = manifestFiles(spark, path, v)
-          val affectedFiles = prevFiles.filter(f => parts.contains(f.split('/').head))
+          val affectedFiles = prevEntries.map(_.path)
+            .filter(f => changedParts.contains(f.split('/').head))
           if (affectedFiles.isEmpty) inserts
           else {
-            val affected = spark.read.option("basePath", path).option("mergeSchema", "true")
-              .parquet(affectedFiles.map(f => s"$path/$f"): _*)
+            val affected = readFiles(spark, path, tableSchema, affectedFiles)
             val survivors0 = affected.join(
               u.select(col(keyCol), col(partCol)), Seq(keyCol, partCol), "left_anti")
             // widen survivors with the batch's added columns as NULL
@@ -598,15 +661,23 @@ object Versioned {
       // delete batch) produces no new file — it must still drop out of
       // the carried set, so the CLAIM covers every affected partition,
       // not just those that got new files
-      val changedParts = partVals.map(v => s"$partCol=$v").toSet
       val claimed = newFiles.map(_.split('/').head).toSet ++ changedParts
+      beforeCommit()
       // carried files KEEP their recorded stats; new files get theirs
-      // from the one-column stats pass
+      // from their footers
       val newEntries = entriesWithStats(spark, path, newFiles,
         statsKeyFor(merged.schema, keyCol))
-      beforeCommit()
+      // A new table's schema is inferred ONCE, from the new files'
+      // footers plus their partition directories (the types every
+      // later read and validation sees); a table with no files at all
+      // takes the batch's. Every later commit derives its schema from
+      // the head's recorded one.
+      lazy val created =
+        if (newFiles.isEmpty) evolve(new StructType(), merged.schema, partCol)
+        else spark.read.option("basePath", path).option("mergeSchema", "true")
+          .parquet(newFiles.map(f => s"$path/$f"): _*).schema
       try commitOptimistic(spark, fs, root, path, prev, claimed, newEntries,
-        Some(merged.schema))
+        Some(merged.schema), _.fold(created)(evolve(_, merged.schema, partCol)))
       catch { case scala.util.control.NonFatal(e) =>
         // a failed commit must not leak: the loser's freshly moved-in
         // data files are referenced by no manifest (its commit never
@@ -645,9 +716,9 @@ object Versioned {
     * a true conflict: the compacted files were rewritten from now-dead
     * inputs, so the loser cleans up its orphans and fails loudly.
     * Schema revalidation is intentionally skipped ([[commitOptimistic]]
-    * schemaCheck = None): compacted files carry their own partitions'
-    * schema and a column widened elsewhere still lives in that
-    * partition's files.
+    * schemaCheck = None): compaction changes no schema, so it commits
+    * the head's recorded schema, and a column widened elsewhere reads
+    * as NULL from the compacted files.
     */
   def compact(spark: SparkSession, path: String, partCol: String,
       maxFiles: Int = 1): Int =
@@ -661,17 +732,15 @@ object Versioned {
     require(maxFiles >= 1, "maxFiles must be at least 1")
     val root = new Path(path)
     val fs = fsOf(spark, root)
-    val v = latestVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"versioned table $path has no commits"))
-    val entries = manifestEntries(spark, path, v)
-    val byPart = entries.groupBy(_.path.split('/').head)
+    val v = headOf(spark, path)
+    val m = readManifest(spark, path, v)
+    val byPart = m.entries.groupBy(_.path.split('/').head)
     val toCompact = byPart.filter(_._2.size > maxFiles)
     if (toCompact.isEmpty) return v
     val tag = "c" + java.util.UUID.randomUUID().toString.take(8)
     val tmp = new Path(root.getParent, root.getName + "_vtmp_" + tag)
     fs.delete(tmp, true)
-    val affected = spark.read.option("basePath", path).option("mergeSchema", "true")
-      .parquet(toCompact.values.flatten.map(e => s"$path/${e.path}").toSeq: _*)
+    val affected = readFiles(spark, path, m.schema, toCompact.values.flatten.map(_.path).toSeq)
     affected.repartition(col(partCol)).write.partitionBy(partCol).parquet(tmp.toString)
     val newFiles = moveIn(fs, tmp, root, tag)
     fs.delete(tmp, true)
@@ -679,12 +748,12 @@ object Versioned {
     // compacted files get fresh stats on the stats column the table
     // already tracks (inherited from the live entries — compact has
     // no key parameter of its own)
-    val inheritedKey = entries.flatMap(_.statsCol).headOption
+    val inheritedKey = m.entries.flatMap(_.statsCol).headOption
       .flatMap(k => statsKeyFor(affected.schema, k))
     val newEntries = entriesWithStats(spark, path, newFiles, inheritedKey)
     beforeCommit()
     try commitOptimistic(spark, fs, root, path, Some(v), compacted, newEntries,
-      schemaCheck = None)
+      schemaCheck = None, schemaFor = _.getOrElse(m.schema))
     catch { case scala.util.control.NonFatal(e) =>
       // same no-leak rule as the merge path: a conflicted or failed
       // compaction's rewritten files are referenced by no manifest

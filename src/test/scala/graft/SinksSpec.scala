@@ -12,6 +12,20 @@ class SinksSpec extends AnyFunSuite {
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).resolve("out").toString
 
+  /** Every version's recorded schema equals the schema a footer merge
+    * plus partition inference over its live files yields. */
+  private def assertSchemasRecorded(path: String): Unit = {
+    import graft.sources.Versioned
+    Versioned.versions(spark, path).foreach { v =>
+      val files = Versioned.manifestFiles(spark, path, v)
+      if (files.nonEmpty) {
+        val merged = spark.read.option("basePath", path).option("mergeSchema", "true")
+          .parquet(files.map(f => s"$path/$f"): _*).schema
+        assert(Versioned.tableSchema(spark, path, v) == merged, s"version $v of $path")
+      }
+    }
+  }
+
   test("csv roundtrip preserves rows and header") {
     val df = Tables.nation(spark, sf)
     val path = tmp("csv")
@@ -451,6 +465,7 @@ class SinksSpec extends AnyFunSuite {
     // v2 and v4 hold identical contents (key 4 came and went in p1)
     assert(d(2, 4) == Set.empty)
     assert(d(0, 0) == Set.empty)
+    assertSchemasRecorded(path)
   }
 
   test("versioned schema evolution: add-column upsert widens, old snapshots keep their shape, conflicts rejected") {
@@ -508,6 +523,10 @@ class SinksSpec extends AnyFunSuite {
     val changes = Versioned.diff(spark, path, v0, v1, "id", "part")
       .collect().map(r => (r.getLong(0), r.getString(2))).toSet
     assert(changes == Set((2L, "update")))
+    assert(!Versioned.tableSchema(spark, path, v0).fieldNames.contains("score"))
+    assert(Versioned.tableSchema(spark, path, v2).fieldNames.toSeq ==
+      Seq("id", "v", "score", "part"))
+    assertSchemasRecorded(path)
   }
 
   test("versioned restore: rollback is a new commit, zero data IO, re-restorable") {
@@ -535,6 +554,7 @@ class SinksSpec extends AnyFunSuite {
     assert(rowsAt(v3) == rowsAt(v1))
     // restoring a missing version fails loudly
     intercept[IllegalArgumentException] { Versioned.restore(spark, path, 99) }
+    assertSchemasRecorded(path)
   }
 
   test("versioned optimistic concurrency: interleaved disjoint writers both land; true overlap fails the loser") {
@@ -612,6 +632,7 @@ class SinksSpec extends AnyFunSuite {
     }
     assert(onDisk == referenced,
       s"orphan data files leaked: ${onDisk diff referenced}")
+    assertSchemasRecorded(path)
   }
 
   test("versioned compact: fewer files, identical contents, history intact") {
@@ -642,6 +663,7 @@ class SinksSpec extends AnyFunSuite {
       .as[(Long, String, String)].collect().toSet == beforeRows)
     // idempotent: nothing left to compact → no new version
     assert(Versioned.compact(spark, path, "part") == v1)
+    assertSchemasRecorded(path)
   }
 
   test("versioned compact vs concurrent upsert: disjoint merges, overlap conflicts, restore always conflicts") {
@@ -721,6 +743,145 @@ class SinksSpec extends AnyFunSuite {
     }
     assert(onDisk == referenced,
       s"orphan data files leaked: ${onDisk diff referenced}")
+    assertSchemasRecorded(path)
+  }
+
+  test("versioned disjoint widening: a widening merge retries past a disjoint commit; compaction keeps a concurrent widening") {
+    import spark.implicits._
+    import graft.sources.Versioned
+    def rows(p: String) = Versioned.snapshot(spark, p)
+      .select(col("id"), col("v"), col("score"), col("part")).collect()
+      .map(r => (r.getLong(0), r.getString(1),
+        Option(r.get(2)).map(_.asInstanceOf[Double]), r.getString(3))).toSet
+    // a merge that ADDS `score` in p1 loses the race to a commit in p2:
+    // the retry keeps the new head's columns and appends its own
+    val path = tmp("versioned-widen")
+    Versioned.upsert(spark, path,
+      Seq((1L, "a", "p1"), (2L, "b", "p2")).toDF("id", "v", "part"), "id", "part")
+    val vA = Versioned.upsertWithHook(spark, path,
+      Seq((1L, "A", 0.5, "p1")).toDF("id", "v", "score", "part"), "id", "part") { () =>
+      Versioned.upsert(spark, path, Seq((2L, "B", "p2")).toDF("id", "v", "part"), "id", "part")
+    }
+    assert(vA == 2)
+    assert(Versioned.tableSchema(spark, path, vA).fieldNames.toSeq ==
+      Seq("id", "v", "score", "part"))
+    assert(rows(path) == Set((1L, "A", Some(0.5), "p1"), (2L, "B", None, "p2")))
+    // a later merge into p2, whose files predate `score`, keeps the
+    // batch's score: the affected files are read with the table schema
+    Versioned.upsert(spark, path,
+      Seq((2L, "B2", 0.7, "p2")).toDF("id", "v", "score", "part"), "id", "part")
+    assert(rows(path) == Set((1L, "A", Some(0.5), "p1"), (2L, "B2", Some(0.7), "p2")))
+    assertSchemasRecorded(path)
+    // compaction retries past a disjoint commit that widens the table:
+    // the compacted files lack `score`, the committed schema keeps it
+    val cpath = tmp("versioned-widen-compact")
+    Versioned.upsert(spark, cpath,
+      ((1L to 20L).map(i => (i, s"v$i", "p0")) :+ ((100L, "x", "p9")))
+        .toDF("id", "v", "part").repartition(4), "id", "part")
+    val vC = Versioned.compactWithHook(spark, cpath, "part") { () =>
+      Versioned.upsert(spark, cpath,
+        Seq((100L, "y", 0.5, "p9")).toDF("id", "v", "score", "part"), "id", "part")
+    }
+    assert(vC == 2)
+    assert(Versioned.manifestFiles(spark, cpath, vC).count(_.startsWith("part=p0")) == 1)
+    assert(Versioned.tableSchema(spark, cpath, vC).fieldNames.toSeq ==
+      Seq("id", "v", "score", "part"))
+    assert(rows(cpath) ==
+      ((1L to 20L).map(i => (i, s"v$i", Option.empty[Double], "p0")) :+
+        ((100L, "y", Some(0.5), "p9"))).toSet)
+    assertSchemasRecorded(cpath)
+  }
+
+  test("versioned integral partition column: the inferred type is recorded once and merges validate against it") {
+    import spark.implicits._
+    import graft.sources.Versioned
+    val path = tmp("versioned-intpart")
+    Versioned.upsert(spark, path,
+      Seq((1L, "a", 1), (2L, "b", 2)).toDF("id", "v", "part"), "id", "part")
+    Versioned.upsert(spark, path, Seq((1L, "A", 1), (3L, "c", 3)).toDF("id", "v", "part"),
+      "id", "part")
+    assert(Versioned.tableSchema(spark, path, 1)("part").dataType ==
+      org.apache.spark.sql.types.IntegerType)
+    assert(Versioned.snapshot(spark, path).select(col("id"), col("v"), col("part"))
+      .as[(Long, String, Int)].collect().toSet == Set((1L, "A", 1), (2L, "b", 2), (3L, "c", 3)))
+    assertSchemasRecorded(path)
+  }
+
+  test("versioned table created by a delete-only CDC batch records the batch schema and keeps merging") {
+    import spark.implicits._
+    import graft.sources.Versioned
+    val path = tmp("versioned-empty-create")
+    val v0 = Versioned.applyCdc(spark, path,
+      Seq[(Long, String, String, String)]((1L, null, "p1", "delete"))
+        .toDF("id", "v", "part", "op"), "id", "part", "op")
+    assert(Versioned.manifestFiles(spark, path, v0).isEmpty)
+    assert(Versioned.tableSchema(spark, path, v0).fieldNames.toSeq == Seq("id", "v", "part"))
+    Versioned.upsert(spark, path, Seq((2L, "b", "p1")).toDF("id", "v", "part"), "id", "part")
+    assert(Versioned.snapshot(spark, path).select(col("id"), col("v"), col("part"))
+      .as[(Long, String, String)].collect().toSet == Set((2L, "b", "p1")))
+  }
+
+  test("versioned reads run one job per collect; a manifest without the schema header is rejected") {
+    import spark.implicits._
+    import graft.sources.Versioned
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val path = tmp("versioned-jobs")
+    Versioned.upsert(spark, path,
+      Seq((1L, "a", "p1"), (2L, "b", "p2")).toDF("id", "v", "part"), "id", "part")
+    Versioned.upsert(spark, path,
+      Seq((3L, "c", 0.5, "p1")).toDF("id", "v", "score", "part"), "id", "part")
+    def jobsOf(body: => Unit): Int = {
+      val sc = spark.sparkContext
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val l = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      }
+      org.apache.spark.ListenerBusBridge.drain(sc)
+      sc.addSparkListener(l)
+      try { body; org.apache.spark.ListenerBusBridge.drain(sc) }
+      finally sc.removeSparkListener(l)
+      jobs.get
+    }
+    assert(jobsOf(Versioned.snapshot(spark, path).collect()) == 1)
+    assert(jobsOf(Versioned.snapshot(spark, path, 0).collect()) == 1)
+    assert(jobsOf(Versioned.snapshotRange(spark, path, "id", 1L, 2L).collect()) == 1)
+    // strip the header: every reader of that version fails, naming the file
+    val mf = new java.io.File(path, "_graft_log/v00000001.manifest").toPath
+    val lines = Files.readAllLines(mf)
+    assert(lines.get(0).startsWith("#schema\t"))
+    Files.write(mf, lines.subList(1, lines.size))
+    Files.deleteIfExists(mf.resolveSibling(s".${mf.getFileName}.crc")) // stale checksum
+    val e = intercept[IllegalStateException](Versioned.snapshot(spark, path))
+    assert(e.getMessage.contains(mf.toString), e.getMessage)
+    intercept[IllegalStateException](Versioned.manifestFiles(spark, path, 1))
+  }
+
+  test("versioned footer-stat fallback: an unreadable footer commits stats-less, counted") {
+    import spark.implicits._
+    import graft.sources.Versioned
+    val path = tmp("versioned-badfooter")
+    Versioned.upsert(spark, path,
+      Seq((1L, "a", "p1"), (2L, "b", "p2")).toDF("id", "v", "part"), "id", "part")
+    val before = Versioned.footerStatsFallbacks.get
+    // truncate the merge's freshly landed p1 files before their footers are read
+    var truncated = 0
+    val v1 = Versioned.upsertWithHook(spark, path,
+      Seq((3L, "c", "p1")).toDF("id", "v", "part"), "id", "part") { () =>
+      val live = Versioned.manifestFiles(spark, path, 0).toSet
+      val fresh = new java.io.File(path, "part=p1").listFiles().toSeq
+        .filter(f => f.getName.endsWith(".parquet") && !live(s"part=p1/${f.getName}"))
+      assert(fresh.nonEmpty)
+      fresh.foreach { f =>
+        val raf = new java.io.RandomAccessFile(f, "rw")
+        try raf.setLength(raf.length / 2) finally raf.close()
+      }
+      truncated = fresh.size
+    }
+    assert(v1 == 1)
+    assert(Versioned.footerStatsFallbacks.get == before + truncated)
+    val e1 = Versioned.manifestEntries(spark, path, v1)
+    assert(e1.filter(_.path.startsWith("part=p1")).forall(_.statsCol.isEmpty), e1.toString)
+    assert(e1.filter(_.path.startsWith("part=p2")).forall(_.statsCol.contains("id")), e1.toString)
   }
 
   test("versioned table: snapshots time-travel, untouched partitions share files, vacuum retires") {
